@@ -9,9 +9,12 @@ Four tiers, by scale posture:
   *oracle-checkable* ground truth that the sketch variants are validated
   against at small SF; not the 100 TB path.
 - **MinHash + banded LSH** (`dd03`): the scale path. Shingles → k minhash
-  values (one pass, deterministic hash family) → band buckets → candidate
-  pairs only within buckets. Cost is ~linear in corpus size for fixed
-  band/row parameters; the full pairwise comparison never happens.
+  values (one map-only pass: md5 shingle hashes in Spark, the k affine
+  minima in a vectorised numpy kernel over Arrow batches) → band buckets
+  → candidate pairs only within buckets. Cost is ~linear in corpus size
+  for fixed band/row parameters; the full pairwise comparison never
+  happens. `lsh_verified_edges` (dd05) then scores each candidate pair's
+  exact Jaccard pair-locally, intersecting the two docs' shingle arrays.
 - **SimHash** (`dd04`): 64-bit signature per doc; near-dups have small
   Hamming distance. Linear, join-free signature computation.
 
@@ -26,8 +29,14 @@ parallelism, and are additionally validated against the exact tiers
 
 from __future__ import annotations
 
+from functools import partial
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from pyconnect_spark.cachereg import track
 from pyconnect_spark.operators._util import spread, spread_on, t
@@ -87,24 +96,31 @@ def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return docs.select("doc_id", F.explode(arr).alias("sh"))
 
 
-def _word_shingles(
+def _word_shingle_arrays(
     docs: DataFrame, n: int = 3, *, spread_input: bool = True
 ) -> DataFrame:
-    """Distinct word n-gram shingles per doc: doc_id, sh.
+    """Distinct word n-gram shingles per doc, one array row per doc:
+    doc_id, sh (array<string>; null for a null text).
 
-    Word-level shingling is the published choice for document-scale
-    MinHash dedup (e.g. the C4/Gopher/RefinedWeb pipelines): ~10× fewer
-    shingles than char n-grams and O(len) to produce — split once, then
-    join n-token windows of the token array."""
-    # Tokenize+shingle+explode is map-heavy; floor its parallelism so it
-    # never fuses to a one-task single-file scan (guide §2.5) — no-op when
-    # the scan already carries >= cores partitions. Callers shingling a
+    The one shingle definition of the word tier: _word_shingles explodes
+    it, minhash_signatures hashes it, and lsh_verified_edges intersects
+    it pairwise. Word-level shingling is the published choice for
+    document-scale MinHash dedup (e.g. the C4/Gopher/RefinedWeb
+    pipelines): ~10× fewer shingles than char n-grams and O(len) to
+    produce — split once, then join n-token windows of the token array.
+    A doc of fewer than n tokens yields one partial shingle; an empty or
+    whitespace-only text yields the single shingle ''."""
+    # Tokenize+shingle is map-heavy; floor its parallelism so it never
+    # fuses to a one-task single-file scan (guide §2.5) — no-op when the
+    # scan already carries >= cores partitions. Callers shingling a
     # deliberately tiny frame (dd22's 30-doc audit sample) pass
     # spread_input=False: a 1-partition LIMIT sample looks identical to a
     # 1-partition corpus scan to the floor, and fanning 30 rows across
     # the cluster costs more scheduling than it buys.
     if spread_input:
         docs = spread(docs, "doc_id")
+    # toks is its own projection: referenced inside the transform lambda,
+    # an inline split would re-run once per shingle.
     with_toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
     )
@@ -114,7 +130,19 @@ def _word_shingles(
             lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
         )
     )
-    return with_toks.select("doc_id", F.explode(arr).alias("sh"))
+    return with_toks.select(
+        "doc_id", F.when(F.col("toks").isNotNull(), arr).alias("sh")
+    )
+
+
+def _word_shingles(
+    docs: DataFrame, n: int = 3, *, spread_input: bool = True
+) -> DataFrame:
+    """Distinct word n-gram shingles per doc: doc_id, sh — one row per
+    shingle (the exploded _word_shingle_arrays; a null text has none)."""
+    return _word_shingle_arrays(docs, n, spread_input=spread_input).select(
+        "doc_id", F.explode("sh").alias("sh")
+    )
 
 
 @REGISTRY.register(
@@ -171,75 +199,80 @@ def dd02(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _minhash_fold(
+    batches: Iterator[pa.RecordBatch], a: np.ndarray, b: np.ndarray
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: (doc_id, hs: list<long>) batches → (doc_id,
+    signature: list<long>), signature[i] = min over hs of (a[i]·h + b[i]) mod p.
+
+    One hash function at a time over the batch's flat shingle-hash
+    buffer: an affine map into a scratch buffer of one int64 per shingle,
+    then np.minimum.reduceat over the per-doc segments — memory stays
+    O(shingles + docs·k), never an (n_shingles × k) matrix. h < p < 2^31
+    and a, b < 2^31, so a·h + b < 2^62 never wraps int64 and the
+    remainder equals Spark's long arithmetic bit for bit. A null hs gives
+    a null signature; an empty one gives all-p (the min over nothing)."""
+    k = len(a)
+    for batch in batches:
+        hs = batch.column(1)
+        n = len(hs)
+        lens = hs.value_lengths().fill_null(0).to_numpy()
+        flat = hs.flatten().to_numpy()
+        filled = lens > 0
+        starts = (np.cumsum(lens) - lens)[filled]
+        mins = np.full((k, n), _MERSENNE, dtype=np.int64)
+        if starts.size:
+            scratch = np.empty_like(flat)
+            for i in range(k):
+                np.multiply(flat, a[i], out=scratch)
+                np.add(scratch, b[i], out=scratch)
+                np.remainder(scratch, _MERSENNE, out=scratch)
+                mins[i, filled] = np.minimum.reduceat(scratch, starts)
+        signature = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, (n + 1) * k, k, dtype=np.int32)),
+            pa.array(mins.T.ravel()),
+            mask=hs.is_null(),
+        )
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), signature], ["doc_id", "signature"]
+        )
+
+
 def minhash_signatures(
     docs: DataFrame, n_hashes: int = _N_HASHES, param_offset: int = 0
 ) -> DataFrame:
     """doc_id → array<long> minhash signature — shuffle-free.
 
-    Word-3-gram shingles stay an *array* per document; each of the k
-    permutations is array_min(transform(hashed_shingles, affine_i)). The
-    whole signature is one narrow projection: no explode, no groupBy, no
-    shuffle — a map-only stage that scales with input splits alone.
-    (The earlier explode + 64-way min-agg formulation shuffled ~50 shingle
-    rows per doc and was ~2× slower at sf0.1.)
+    Word-3-gram shingles stay an *array* per document
+    (_word_shingle_arrays); each shingle is hashed in Spark to the first
+    15 hex chars of its md5 (60 bits) mod the Mersenne field — a public
+    hash DuckDB computes bit-identically, which is what makes the whole
+    MinHash+LSH pipeline oracle-checkable. The k affine permutations
+    min((a_i·h + b_i) mod p) then run as one vectorised numpy pass per
+    Arrow batch (_minhash_fold via mapInArrow). The whole signature is a
+    map-only stage — no explode, no groupBy, no shuffle — that scales
+    with input splits alone, and works unchanged on a streaming frame.
+    Hash i uses the family's parameters i + param_offset (dd42 draws an
+    independent family that way); doc_id keeps its input type, and a null
+    text gives a null signature.
     """
-    n = 3
-    with_toks = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
-    shingle_arr = F.array_distinct(
+    hashed = _word_shingle_arrays(docs).select(
+        "doc_id",
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
-        )
+            "sh",
+            lambda s: F.pmod(
+                F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
+                F.lit(_MERSENNE),
+            ),
+        ).alias("hs"),
     )
-    # Small local files arrive as one partition; spread the map work
-    # (conditional + keyed: no-op when the scan already has >= cores
-    # partitions, hash-keyed so no round-robin pre-sort).
-    # Shingle hash: first 15 hex chars of md5 (60 bits) mod the Mersenne
-    # field — a public hash both engines compute bit-identically, which is
-    # what makes the whole MinHash+LSH pipeline oracle-checkable in DuckDB
-    # (measured cost parity with xxhash64 at sf0.1: the 64 affine
-    # permutations dominate, not the shingle hash).
-    hashed = (
-        spread(with_toks, "doc_id")
-        .select(
-            "doc_id",
-            F.transform(
-                shingle_arr,
-                lambda s: F.pmod(
-                    F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-                    F.lit(_MERSENNE),
-                ),
-            ).alias("hs"),
-        )
+    a, b = np.array(
+        [_hash_params(i + param_offset) for i in range(n_hashes)], dtype=np.int64
+    ).T
+    schema = StructType(
+        [hashed.schema["doc_id"], StructField("signature", ArrayType(LongType()))]
     )
-    # One aggregate pass with a k-wide accumulator instead of k separate
-    # array_min(transform(...)) traversals. Values are bit-identical (the
-    # update is MIN((a_i*h + b_i) % p) either way — checksum-verified), but
-    # the k-traversal form generates ~k codegen loops and costs ~6 s of
-    # whole-stage-codegen COMPILE on first execution at k=64; this form
-    # compiles in <1 s with identical warm runtime (~0.6 s at sf0.1).
-    # Under bench's min-of-2 on a steal-prone host, a 6 s pass-1 makes the
-    # reported min hostage to pass-2 noise — this was the bulk of the
-    # round-3 "dd03 2x regression" (the md5 family itself re-measured at
-    # cost parity with xxhash64 this round).
-    params = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for (a, b) in (
-                _hash_params(i + param_offset) for i in range(n_hashes)
-            )
-        ]
-    )
-    signature = F.aggregate(
-        F.col("hs"),
-        F.array(*[F.lit(_MERSENNE).cast("long")] * n_hashes),
-        lambda acc, h: F.zip_with(
-            acc, params, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % F.lit(_MERSENNE))
-        ),
-    )
-    return hashed.select("doc_id", signature.alias("signature"))
+    return hashed.mapInArrow(partial(_minhash_fold, a=a, b=b), schema)
 
 
 def band_keys(
@@ -646,12 +679,11 @@ def word_jaccard_edges(docs: DataFrame, threshold: float) -> DataFrame:
     return common.filter(jacc >= threshold).select("a", "b")
 
 
-# Broadcast cap for the LSH verify tier's candidate-pair / candidate-doc
-# frames: 1M pairs is ~80 MB as a built hash relation (2 longs + 2 ints a
-# row) — comfortably inside executor memory at any deployment size, far
-# under the 8 GB broadcast hard cap. Above it, the verify tier falls back
-# to the shuffle form. Tests force it to 0 to exercise the fallback.
-_VERIFY_BCAST_CAP = 1_000_000
+# Broadcast cap for dd44's measured dup-cluster membership frame: 1M doc
+# ids is a few tens of MB as a built hash relation — comfortably inside
+# executor memory at any deployment size, far under the 8 GB broadcast
+# hard cap. Above it, the membership semi-join takes the shuffle form.
+_MEMBERS_BCAST_CAP = 1_000_000
 
 # Doc-count cap for dd34's measured broadcast-vs-merge decision: under it
 # the doc-grain split map (long + 5-char split per row — ~60 MB as a
@@ -667,7 +699,18 @@ def lsh_verified_edges(
     (dd03's signatures — only co-bucketed docs ever meet) verified by
     EXACT word-3-gram Jaccard computed on the candidates alone. The
     all-pairs-within-bucket quadratic of the exact tier is replaced by
-    |candidates| x shingles join work, which is what survives 100 TB.
+    |candidates| pair-local set intersections, which is what survives
+    100 TB.
+
+    Pair-local verify: each doc's distinct shingles are ONE array row
+    (_word_shingle_arrays, xxhash64-ed to 8-byte longs — the exact tier's
+    collision argument), joined to the candidate pairs on doc_a and then
+    doc_b; |A ∩ B| is size(array_intersect) on the pair row itself. Both
+    joins exchange the same doc-keyed array frame, so at scale that is one
+    shuffle of one row per doc (Spark reuses the exchange), where a
+    shingle-keyed self-join would shuffle one row per shingle twice and
+    then group-count. The size-ratio bound (J ≤ min/max, so ratio < t can
+    never pass the J ≥ t gate) prunes a pair before its intersection.
 
     Exactness: candidate recall is the banded-LSH S-curve (8 bands x 8
     rows: ~0.9998 at J=0.9, lower right at the 0.8 threshold edge); the
@@ -676,76 +719,29 @@ def lsh_verified_edges(
     test_llm_ops::test_dd05_lsh_tier_agrees_with_exact_tier), so dd05's
     exact-edge oracle stays hash-green while the declared plan is the
     scale-shaped one."""
-    cand = lsh_candidate_pairs(minhash_signatures(docs), n_bands).select(
+    cand = lsh_candidate_pairs(minhash_signatures(docs), n_bands)
+    sh = _word_shingle_arrays(docs).select(
+        "doc_id", F.transform("sh", lambda s: F.xxhash64(s)).alias("h")
+    )
+    x = sh.select(F.col("doc_id").alias("doc_a"), F.col("h").alias("ha"))
+    y = sh.select(F.col("doc_id").alias("doc_b"), F.col("h").alias("hb"))
+    na, nb = F.size("ha"), F.size("hb")
+    pairs = (
+        cand.join(x, "doc_a")
+        .join(y, "doc_b")
+        .where(F.least(na, nb) >= threshold * F.greatest(na, nb))
+        .select(
+            "doc_a",
+            "doc_b",
+            na.alias("na"),
+            nb.alias("nb"),
+            F.size(F.array_intersect("ha", "hb")).alias("nc"),
+        )
+    )
+    jacc = F.col("nc").cast("double") / (F.col("na") + F.col("nb") - F.col("nc"))
+    return pairs.where(jacc >= threshold).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    base = _word_shingles(docs).select("doc_id", F.xxhash64("sh").alias("h"))
-    sz = base.groupBy("doc_id").agg(F.count("*").alias("n"))
-    cand = (
-        cand.join(
-            sz.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a"
-        )
-        .join(sz.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
-        # size-ratio bound, exactness-preserving (same prune as the exact
-        # tier): J <= min/max, so ratio < t can never pass the J >= t gate
-        .filter(
-            F.least("na", "nb") >= threshold * F.greatest("na", "nb")
-        )
-        # Pinned: consumed three times below (doc set, pair filter, and
-        # via both broadcasts) — unpinned, each broadcast build would
-        # re-run the whole LSH candidate pipeline.
-        .localCheckpoint(eager=False)
-    )
-    # Size gate for the verify tier's broadcasts (round-11 verdict item 4 /
-    # advice item 1): the count materializes the pinned candidate frame —
-    # a job the first consumer would otherwise run — and MEASURES the
-    # dup-suspect slice instead of asserting it is small. On a dup-heavy
-    # pathological corpus the candidate set is not guaranteed KB-scale,
-    # and an explicit F.broadcast over the cap fails the job instead of
-    # degrading; over the cap we take the shuffle form below.
-    n_cand = cand.count()
-    if n_cand <= _VERIFY_BCAST_CAP:
-        # Verify tier, dd14's shape (guide §3.2 posture): restrict the
-        # shingle frame to candidate DOCS via a broadcast join BEFORE any
-        # shingle-keyed exchange, so the corpus-scale base is never
-        # shuffled — the old form shuffled the FULL shingle frame twice
-        # (once by doc to meet the candidates, once by (doc, hash) for the
-        # intersection). PER-SIDE restriction (a-docs / b-docs separately,
-        # round-11 advice item 2): a boilerplate shingle hash shared by k
-        # candidate docs expands to k_a x k_b rows in the h-join instead
-        # of k^2/2 — the hot-key blowup never materializes pairs both
-        # banding and the size-ratio bound already pruned from one side.
-        a_docs = cand.select(F.col("a").alias("doc_id")).distinct()
-        b_docs = cand.select(F.col("b").alias("doc_id")).distinct()
-        xa = base.join(F.broadcast(a_docs), "doc_id").select(
-            F.col("doc_id").alias("a"), "h"
-        )
-        yb = base.join(F.broadcast(b_docs), "doc_id").select(
-            F.col("doc_id").alias("b"), "h"
-        )
-        common = (
-            xa.join(yb, "h")
-            .where(F.col("a") < F.col("b"))
-            .join(F.broadcast(cand), ["a", "b"])
-            .groupBy("a", "b", "na", "nb")
-            .agg(F.count("*").alias("nc"))
-        )
-    else:
-        # Shuffle fallback (the pre-broadcast form, exercised by
-        # tests/test_llm_ops.py with the cap forced to 0): join the
-        # shingle frame to the candidate pairs by doc keys — two
-        # corpus-scale exchanges, but no broadcast of an over-cap
-        # candidate set. Same aggregate, same result.
-        x = base.select(F.col("doc_id").alias("a"), "h")
-        y = base.select(F.col("doc_id").alias("b"), "h")
-        common = (
-            cand.join(x, "a")
-            .join(y, ["b", "h"])
-            .groupBy("a", "b", "na", "nb")
-            .agg(F.count("*").alias("nc"))
-        )
-    jacc = F.col("nc").cast("double") / (F.col("na") + F.col("nb") - F.col("nc"))
-    return common.filter(jacc >= threshold).select("a", "b")
 
 
 _DD05_SHINGLES_SQL = """
@@ -4775,8 +4771,8 @@ def dd44(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size>1 cluster — so shingle ONLY those docs instead of the whole
     # corpus, which the round-open plan shingled four separate times
     # (§2.3: project/filter before the expensive work; §1.2). Membership
-    # is dup-suspect bounded: broadcast under the verify tier's cap,
-    # plain semi-join over it.
+    # is dup-suspect bounded: broadcast under _MEMBERS_BCAST_CAP, plain
+    # semi-join over it.
     members = comp.join(cs.select("root"), "root").select(
         F.col("node").alias("doc_id")
     )
@@ -4785,7 +4781,7 @@ def dd44(spark: SparkSession, sf_dir: str) -> DataFrame:
     # static scan plan — probing the join frame would finalize its
     # adaptive plan), then shingle without re-spreading
     mdocs = spread(docs, "doc_id").join(
-        F.broadcast(members) if n_members <= _VERIFY_BCAST_CAP else members,
+        F.broadcast(members) if n_members <= _MEMBERS_BCAST_CAP else members,
         "doc_id",
         "left_semi",
     )

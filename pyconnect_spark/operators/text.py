@@ -2188,52 +2188,66 @@ def tx33(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tx34_shard_sql(ctx: int) -> str:
-    """One context length's per-shard next-fit fold, replayed in DuckDB via
-    list_reduce (left fold, same order as the Spark aggregate)."""
-    return f"""
-      SELECT {ctx} AS ctx, shard,
-             list_reduce(
-               list_transform(list(least(n_tok, {ctx}) ORDER BY doc_id),
-                              n -> struct_pack(s := CAST(1 AS BIGINT),
-                                               f := CAST(n AS BIGINT))),
-               (a, x) -> CASE WHEN a.f + x.f <= {ctx}
-                              THEN struct_pack(s := a.s, f := a.f + x.f)
-                              ELSE struct_pack(s := a.s + CAST(1 AS BIGINT),
-                                               f := x.f) END) AS st,
-             CAST(SUM(least(n_tok, {ctx})) AS BIGINT) AS kept,
-             CAST(SUM(CASE WHEN n_tok > {ctx} THEN n_tok - {ctx} ELSE 0 END)
-                  AS BIGINT) AS truncated
-      FROM toks GROUP BY 2
-    """
+_TX34_CTXS = (512, 1024, 2048, 4096)
 
-
-@REGISTRY.register(
-    "tx34_packing_curve",
-    oracle=r"""
-    WITH toks AS (
+# DuckDB replay of tx34's per-shard next-fit fold: a recursive CTE that
+# packs one doc per step in doc_id order (s = sequences opened, f = fill
+# of the open one). Not list_reduce over a struct accumulator: DuckDB
+# 1.0's list_reduce folded one fixture shard (sf0.01, shard 14) to 5
+# sequences when other shards' lists shared its vector and to 4 when run
+# alone; Spark and a plain Python next-fit give 4. Shared by the oracle
+# and by the test that pins the per-shard counts.
+_TX34_FOLD_CTES = rf"""
+    toks AS (
       SELECT doc_id,
              CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 16 AS shard,
              CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok
       FROM documents
     ),
-    per_shard AS (
-      {SHARD_UNION}
+    ctxs AS (SELECT CAST(unnest({list(_TX34_CTXS)}) AS BIGINT) AS ctx),
+    seq AS (
+      SELECT shard, n_tok,
+             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
+      FROM toks
     ),
-    per_ctx AS (
-      SELECT ctx, CAST(SUM(st.s) AS BIGINT) AS n_seqs,
-             CAST(SUM(kept) AS BIGINT) AS packed_tokens,
-             CAST(SUM(truncated) AS BIGINT) AS truncated_tokens
+    fold AS (
+      SELECT c.ctx, q.shard, q.rn, CAST(1 AS BIGINT) AS s,
+             least(q.n_tok, c.ctx) AS f
+      FROM seq q, ctxs c WHERE q.rn = 1
+      UNION ALL
+      SELECT p.ctx, p.shard, q.rn,
+             CASE WHEN p.f + least(q.n_tok, p.ctx) <= p.ctx
+                  THEN p.s ELSE p.s + 1 END,
+             CASE WHEN p.f + least(q.n_tok, p.ctx) <= p.ctx
+                  THEN p.f + least(q.n_tok, p.ctx)
+                  ELSE least(q.n_tok, p.ctx) END
+      FROM fold p JOIN seq q ON q.shard = p.shard AND q.rn = p.rn + 1
+    ),
+    per_shard AS (
+      SELECT ctx, shard, MAX(s) AS n_seqs FROM fold GROUP BY 1, 2
+    )"""
+
+
+@REGISTRY.register(
+    "tx34_packing_curve",
+    oracle=f"""
+    WITH RECURSIVE {_TX34_FOLD_CTES},
+    seqs AS (
+      SELECT ctx, CAST(SUM(n_seqs) AS BIGINT) AS n_seqs
       FROM per_shard GROUP BY 1
+    ),
+    tokens AS (
+      SELECT c.ctx,
+             CAST(SUM(least(n_tok, c.ctx)) AS BIGINT) AS packed_tokens,
+             CAST(SUM(CASE WHEN n_tok > c.ctx THEN n_tok - c.ctx ELSE 0 END)
+                  AS BIGINT) AS truncated_tokens
+      FROM toks, ctxs c GROUP BY 1
     )
-    SELECT CAST(ctx AS BIGINT) AS ctx, n_seqs, packed_tokens, truncated_tokens,
+    SELECT ctx, n_seqs, packed_tokens, truncated_tokens,
            round(1.0 - CAST(packed_tokens AS DOUBLE) / (n_seqs * ctx), 6)
                AS pad_frac
-    FROM per_ctx
-    """.replace(
-        "{SHARD_UNION}",
-        "\n      UNION ALL ".join(_tx34_shard_sql(c) for c in (512, 1024, 2048, 4096)),
-    ),
+    FROM seqs JOIN tokens USING (ctx)
+    """,
     doc="Sequence-packing efficiency curve — the sizing study behind "
     "choosing a training context length: for ctx in 512/1k/2k/4k, pack "
     "whole documents next-fit (no doc splitting — the padding-relevant "
@@ -2246,9 +2260,9 @@ def _tx34_shard_sql(ctx: int) -> str:
     "by construction (next-fit depends on running fill), so docs pack "
     "in md5-shard streams (tx12's sharding): each shard's fold is one "
     "JVM aggregate over its (doc_id-ordered) sizes, shards run in "
-    "parallel, and the oracle replays the identical left fold via "
-    "DuckDB list_reduce. At 100 TB shard count scales with the corpus "
-    "(16 here) — packing is embarrassingly parallel ACROSS shards by "
+    "parallel, and the oracle replays the identical left fold as a "
+    "DuckDB recursive CTE, one doc per step. At 100 TB shard count "
+    "scales with the corpus (16 here) — packing is embarrassingly parallel ACROSS shards by "
     "design, which is exactly how a real tokenizer-sharded pipeline "
     "packs.",
     tags=("text", "llm", "packing", "context", "curve"),
@@ -2266,7 +2280,7 @@ def tx34(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sizes")
     )
     out = []
-    for ctx in (512, 1024, 2048, 4096):
+    for ctx in _TX34_CTXS:
         capped = F.transform("sizes", lambda n: F.least(n, F.lit(ctx)))
         st = F.aggregate(
             capped,

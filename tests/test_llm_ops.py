@@ -364,6 +364,58 @@ def test_tx12_packing_matches_python_replication(spark, tmp_path):
     assert got == want_agg
 
 
+def test_tx34_next_fit_matches_python_replication(spark):
+    """tx34's per-shard next-fit counts equal a pure-Python next-fit on
+    the sf0.01 fixture, in Spark (per-context totals) and in the DuckDB
+    oracle's recursive fold (per shard). Pins shard 14 at ctx 512 to 4
+    sequences (n_seqs 63): DuckDB 1.0's multi-row list_reduce over a
+    struct accumulator, the oracle's former fold, returned 5 for that
+    shard when other shards' lists shared its vector."""
+    import hashlib
+    import re
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from pyconnect_spark.operators.text import _TX34_CTXS, _TX34_FOLD_CTES, tx34
+
+    sf = "/root/testdata/sf0.01"
+    table = pq.read_table(f"{sf}/documents.parquet", columns=["doc_id", "text"])
+    shards: dict[int, list[int]] = {}
+    for doc_id, text in sorted(zip(*table.to_pydict().values())):
+        shard = int(hashlib.md5(text.encode()).hexdigest()[:8], 16) % 16
+        # Spark/DuckDB trim() strips spaces only, then split on \s+
+        shards.setdefault(shard, []).append(len(re.split(r"\s+", text.strip(" "))))
+
+    def next_fit(sizes, ctx):
+        n_seqs, fill = 0, ctx
+        for n in sizes:
+            n = min(n, ctx)
+            if fill + n <= ctx:
+                fill += n
+            else:
+                n_seqs, fill = n_seqs + 1, n
+        return n_seqs
+
+    want = {(c, s): next_fit(v, c) for c in _TX34_CTXS for s, v in shards.items()}
+    assert want[(512, 14)] == 4
+    assert sum(want[(512, s)] for s in shards) == 63
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')")
+    oracle = {
+        (c, s): n
+        for c, s, n in con.sql(
+            f"WITH RECURSIVE {_TX34_FOLD_CTES} SELECT ctx, shard, n_seqs FROM per_shard"
+        ).fetchall()
+    }
+    con.close()
+    assert oracle == want
+
+    got = {r["ctx"]: r["n_seqs"] for r in tx34(spark, sf).collect()}
+    assert got == {c: sum(want[(c, s)] for s in shards) for c in _TX34_CTXS}
+
+
 def test_ts16_twa_matches_python_replication(spark, tmp_path):
     """Property check on random irregular series: distributed trapezoidal
     TWA equals a pure-Python replay — including same-timestamp ties
@@ -846,23 +898,71 @@ def test_dd05_lsh_tier_agrees_with_exact_tier(spark):
         assert scale == exact, (sf, scale ^ exact)
 
 
-def test_lsh_verify_shuffle_fallback_matches_broadcast_path(spark, monkeypatch):
-    """The verify tier's broadcasts are size-gated (round-11 verdict item
-    4): candidate sets over _VERIFY_BCAST_CAP take a shuffle-join form
-    instead of failing an over-cap broadcast. Force the cap to 0 so the
-    fallback branch executes, and pin that both branches produce the
-    identical edge set."""
+def test_lsh_verified_edges_sort_merge_plan_matches_exact_tier(spark):
+    """With broadcast joins off (sort-merge everywhere — the plan a
+    100 TB corpus gets), the pair-local verify still yields exactly the
+    exact tier's edge set on both fixture SFs."""
     from pyconnect_spark.catalog import load_table
-    from pyconnect_spark.operators import dedup
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    bcast = {(r.a, r.b) for r in dedup.lsh_verified_edges(docs, 0.8).collect()}
-    monkeypatch.setattr(dedup, "_VERIFY_BCAST_CAP", 0)
-    fallback = {
-        (r.a, r.b) for r in dedup.lsh_verified_edges(docs, 0.8).collect()
-    }
-    assert bcast, "fixture must actually exercise the tier"
-    assert fallback == bcast, fallback ^ bcast
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+            docs = load_table(spark, sf, "documents")
+            edges = D.lsh_verified_edges(docs, 0.8)
+            scale = {(r.a, r.b) for r in edges.collect()}
+            plan = edges._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+            exact = {(r.a, r.b) for r in D.word_jaccard_edges(docs, 0.8).collect()}
+            assert exact, sf  # the fixture must actually exercise the tier
+            assert scale == exact, (sf, scale ^ exact)
+    finally:
+        spark.conf.set(key, before)
+
+
+def _minhash_reference(text, n_hashes, param_offset):
+    """Pure-Python MinHash of one text: Spark's word-3-gram shingles
+    (trim strips spaces, split on \\s+, short docs give one partial
+    shingle), md5 → 60-bit int mod p, then min of each affine hash."""
+    import hashlib
+    import re
+
+    if text is None:
+        return None
+    toks = re.split(r"\s+", text.strip(" "))
+    shingles = {" ".join(toks[i : i + 3]) for i in range(max(len(toks) - 2, 1))}
+    p = D._MERSENNE
+    hs = [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % p for s in shingles]
+    return [
+        min((a * h + b) % p for h in hs)
+        for a, b in (D._hash_params(i + param_offset) for i in range(n_hashes))
+    ]
+
+
+@pytest.mark.parametrize("n_hashes,param_offset", [(64, 0), (16, 64)])
+def test_minhash_kernel_matches_python_reference(spark, n_hashes, param_offset):
+    """The Arrow-batch MinHash kernel equals a hashlib/int reference bit
+    for bit: null, empty and whitespace-only text, 1- and 2-token docs,
+    repeated shingles, and an input with more partitions than rows (some
+    hand the kernel nothing)."""
+    texts = [
+        None,
+        "",
+        "   ",
+        "a",
+        "a b",
+        "a b c a b c a b c",
+        "x  y\tz w",
+        " the quick brown fox jumps over the lazy dog ",
+    ]
+    rows = list(enumerate(texts))
+    docs = spark.createDataFrame(rows, "doc_id int, text string").repartition(16)
+    sig = D.minhash_signatures(docs, n_hashes=n_hashes, param_offset=param_offset)
+    assert sig.schema["doc_id"].dataType.simpleString() == "int"
+    got = {r.doc_id: r.signature for r in sig.collect()}
+    want = {i: _minhash_reference(t, n_hashes, param_offset) for i, t in rows}
+    assert got == want
 
 
 def test_tx47_handles_sub_two_token_docs(spark, tmp_path):
